@@ -68,7 +68,11 @@ DL_BROADCAST_MAX = int(os.environ.get("IRKIT_DL_BROADCAST_MAX",
 # masks candidates in-place. Above it (mass deletions at 10^9+ docs —
 # at that point compaction is overdue) queries fall back to the
 # cogrouped docs path with the deletions anti-joined out, which only
-# ships the touched shards.
+# ships the touched shards. The gate also picks the write path: an id
+# list whose old set plus new ids fit it is merged and written on the
+# driver (one Spark job per delete_docs, none for the re-broadcast on
+# parquet); above it, and for predicates / DataFrame ids, the merge is
+# a Spark union + distinct.
 DEL_BROADCAST_MAX = int(os.environ.get("IRKIT_DEL_BROADCAST_MAX",
                                        "5000000"))
 

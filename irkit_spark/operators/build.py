@@ -1062,19 +1062,11 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str, *,
                            .select("term_id", "term", "df", "cf",
                                    "max_score"))
         if terms_final is not None:
-            if reuse_tok and fmt != "iceberg":
-                # swap via a temp dir: lex_df reads the live terms path
-                # (local/HDFS rename is atomic enough here; object stores
-                # would use a versioned path + pointer; Iceberg's
-                # createOrReplace IS the atomic swap, so it takes the plain
-                # branch)
-                import shutil
-                tmp_terms = p("terms_tmp")
-                terms_final.write.mode("overwrite").parquet(tmp_terms)
-                shutil.rmtree(p("terms"))
-                os.replace(tmp_terms, p("terms"))
-            else:
-                write_artifact(terms_final, out_dir, "terms", fmt=fmt)
+            # reuse_tok: lex_df reads the live terms path, so swap a
+            # temp dir in (local/HDFS rename is atomic enough here;
+            # object stores would use a versioned path + pointer)
+            write_artifact(terms_final, out_dir, "terms", fmt=fmt,
+                           swap=reuse_tok)
         if lex_df is not None:
             lex_df.unpersist()
         _mark("terms_write")

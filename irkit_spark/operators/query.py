@@ -55,6 +55,13 @@ TOPK_SCHEMA = "doc_id long, score double"
 _BATCH_DRIVER_MAX = 2_000_000
 
 
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """An empty result frame whose collect() runs no Spark job: the
+    optimizer folds limit(0) to an empty LocalRelation, where a bare
+    createDataFrame([]) is RDD-backed and costs one job to collect."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
 def _topk_struct():
     """StructType twin of TOPK_SCHEMA: pandas input + a DDL-string
     schema takes createDataFrame's row-wise fallback; the StructType
@@ -155,24 +162,37 @@ class Index:
     # replaced (destroyed) when delete_docs rewrites the artifact
     _del_bc_cache: dict[tuple, tuple[float, object]] = {}
 
+    def _segment_paths(self) -> list[str]:
+        """Index dirs whose tombstone sets apply to this handle."""
+        return [self.path]
+
     def has_deletions(self) -> bool:
         """Checked per query (a filesystem stat): tombstones can land
         AFTER this handle was constructed and must take effect on the
         next search — same freshness contract as the versioned
         broadcast caches."""
         from irkit_spark.operators.delete import has_deletions
-        return has_deletions(self.spark, self.path, self._fmt)
+        return any(has_deletions(self.spark, p, self._fmt)
+                   for p in self._segment_paths())
 
     def deletions_df(self):
-        from irkit_spark.operators.delete import read_deletions
-        return read_deletions(self.spark, self.path, self._fmt)
+        from irkit_spark.operators.delete import (has_deletions,
+                                                  read_deletions)
+        out = None
+        for p in self._segment_paths():
+            if has_deletions(self.spark, p, self._fmt):
+                b = read_deletions(self.spark, p, self._fmt)
+                out = b if out is None else out.unionByName(b)
+        return out
 
     def deletions_broadcast(self):
         """Per-shard SORTED global-doc-id arrays of the tombstone set
         as one broadcast, or None when no deletions exist or the set
         exceeds DEL_BROADCAST_MAX (queries then anti-join on the
         cogrouped docs path). Version-keyed on the artifact commit so
-        a later delete_docs invalidates every open handle."""
+        a later delete_docs invalidates every open handle. Parquet
+        sets are read on the driver (footer row counts for the gate,
+        then the arrays): zero Spark jobs."""
         if not self.has_deletions():
             return None
         key, ver = self._artifact_key("deletions")
@@ -180,13 +200,22 @@ class Index:
         if hit is not None and hit[0] == ver:
             self._del_bc = hit[1]
             return self._del_bc
-        df = self.deletions_df()
-        n = df.count()
-        if n > config.DEL_BROADCAST_MAX:
-            return None
-        pdf = df.select("partition_id", "doc_id").toPandas()
-        sh = pdf["partition_id"].to_numpy()
-        ids = pdf["doc_id"].to_numpy().astype(np.int64)
+        from irkit_spark.sources.catalog import artifact_format
+        if artifact_format(self._fmt) == "iceberg":
+            df = self.deletions_df()
+            if df.count() > config.DEL_BROADCAST_MAX:
+                return None
+            pdf = df.select("partition_id", "doc_id").toPandas()
+            sh = pdf["partition_id"].to_numpy()
+            ids = pdf["doc_id"].to_numpy().astype(np.int64)
+        else:
+            from irkit_spark.operators.delete import (
+                read_deletions_driver)
+            got = read_deletions_driver(self._segment_paths(),
+                                        config.DEL_BROADCAST_MAX)
+            if got is None:
+                return None
+            sh, ids = got
         arrs: dict[int, np.ndarray] = {}
         for s in np.unique(sh):
             arrs[int(s)] = np.sort(ids[sh == s])
@@ -871,7 +900,7 @@ def _search_local(index: Index, qmeta: list[dict], k: int, mode: str,
                         all_scores, all_scores.size - k)[
                         all_scores.size - k]
     if not parts:
-        return index.spark.createDataFrame([], TOPK_SCHEMA)
+        return empty_frame(index.spark, TOPK_SCHEMA)
     allp = pd.concat(parts, ignore_index=True)
     doc = allp["doc_id"].to_numpy()
     sc = allp["score"].to_numpy()
@@ -1020,9 +1049,8 @@ def search(index: Index, query: str, k: int = 10,
             raise ValueError(f"conflicting boosts for term {t!r}")
         parsed[t] = float(w)
     qmeta = _boosted(index.lookup_query(query), parsed, scorer)
-    empty = spark.createDataFrame([], TOPK_SCHEMA)
     if not qmeta:
-        return empty
+        return empty_frame(spark, TOPK_SCHEMA)
     neg_meta: list[dict] = []
     if exclude_terms:
         if "*" in exclude_terms:
@@ -1159,7 +1187,7 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
     spark = index.spark
     out_schema = "query_id string, doc_id long, score double"
     if not qmetas:
-        return spark.createDataFrame([], out_schema)
+        return empty_frame(spark, out_schema)
     all_tids = sorted({m["term_id"] for qm in qmetas.values()
                        for m in qm})
     qpost = index.postings.filter(F.col("term_id").isin(all_tids))
@@ -1220,7 +1248,7 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
     if n_shards and len(qmetas) * k * n_shards <= _BATCH_DRIVER_MAX:
         pdf = local.toPandas()
         if not len(pdf):
-            return spark.createDataFrame([], out_schema)
+            return empty_frame(spark, out_schema)
         qid = pdf["query_id"].to_numpy()
         doc = pdf["doc_id"].to_numpy()
         sc_ = pdf["score"].to_numpy()
@@ -1534,7 +1562,7 @@ def prefix_search(index: Index, query: str, k: int = 10,
     empty, like an all-OOV plain query."""
     expanded, _ = expand_wildcards(index, query, max_expansions)
     if not expanded:
-        return index.spark.createDataFrame([], TOPK_SCHEMA)
+        return empty_frame(index.spark, TOPK_SCHEMA)
     if exclude_terms and "*" in exclude_terms:
         exclude_terms, _ = expand_wildcards(index, exclude_terms,
                                             max_expansions)
@@ -1710,7 +1738,7 @@ def fuzzy_search(index: Index, query: str, k: int = 10,
     expanded string with explicit `term^w` boosts."""
     expanded, _ = expand_fuzzy(index, query, max_expansions)
     if not expanded:
-        return index.spark.createDataFrame([], TOPK_SCHEMA)
+        return empty_frame(index.spark, TOPK_SCHEMA)
     if exclude_terms and "~" in exclude_terms:
         exclude_terms, _ = expand_fuzzy(index, exclude_terms,
                                         max_expansions)
@@ -1767,7 +1795,7 @@ def regex_search(index: Index, pattern: str, k: int = 10,
     empty, like an all-OOV plain query."""
     terms = expand_regex(index, pattern, max_expansions)
     if not terms:
-        return index.spark.createDataFrame([], TOPK_SCHEMA)
+        return empty_frame(index.spark, TOPK_SCHEMA)
     return search(index, " ".join(sorted(set(terms))), k=k, mode=mode,
                   scorer=scorer, local=local, doc_filter=doc_filter,
                   exclude_terms=exclude_terms or None)

@@ -168,20 +168,8 @@ class SegmentedIndex(Index):
         return ((self.spark.sparkContext.applicationId, self.path,
                  name), ver)
 
-    def has_deletions(self) -> bool:
-        from irkit_spark.operators.delete import has_deletions
-        return any(has_deletions(self.spark, p, self._fmt)
-                   for p in self.paths)
-
-    def deletions_df(self):
-        from irkit_spark.operators.delete import (has_deletions,
-                                                  read_deletions)
-        out = None
-        for p in self.paths:
-            if has_deletions(self.spark, p, self._fmt):
-                b = read_deletions(self.spark, p, self._fmt)
-                out = b if out is None else out.unionByName(b)
-        return out
+    def _segment_paths(self) -> list[str]:
+        return self.paths
 
 
 def open_segments(spark: SparkSession, out_dir: str,

@@ -12,6 +12,7 @@ session catalog (`spark.read.table`), anything else is a parquet path.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -61,12 +62,14 @@ def artifact_format(fmt: str | None = None) -> str:
 def write_artifact(df: DataFrame, base: str, name: str,
                    partition_by: str | None = None,
                    fmt: str | None = None,
-                   dynamic: bool = False) -> None:
+                   dynamic: bool = False, swap: bool = False) -> None:
     """Write one index artifact (tok/docs/postings/terms/stats/lineage)
     under the format knob.
 
     parquet: a dir under `base`; `dynamic=True` keeps the other
-    partition dirs (resume rewrites only pending shards).
+    partition dirs (resume rewrites only pending shards); `swap=True`
+    writes a temp dir and swaps it in (_swap_in) — needed when `df`
+    reads the artifact it replaces.
     iceberg: `base` is a catalog namespace; `dynamic=True` maps to
     `overwritePartitions()` (Iceberg's dynamic overwrite), else
     `createOrReplace()`. Requires the Iceberg extension on the session
@@ -96,38 +99,67 @@ def write_artifact(df: DataFrame, base: str, name: str,
                       "dynamic" if dynamic else "static"))
     if partition_by:
         writer = writer.partitionBy(partition_by)
-    writer.parquet(os.path.join(base, name))
+    path = os.path.join(base, name)
+    if swap:
+        _swap_in(path, writer.parquet)
+    else:
+        writer.parquet(path)
+
+
+def _swap_in(path: str, write) -> None:
+    """write(tmp) into a temp dir beside `path`, then os.replace it
+    over `path`: a crash mid-write leaves the previous artifact intact,
+    never a partial or absent one (rmtree-then-write would), and a
+    read-modify-write never overwrites the files it is reading."""
+    tmp = path + ".__tmp__"
+    shutil.rmtree(tmp, ignore_errors=True)
+    write(tmp)
+    shutil.rmtree(path, ignore_errors=True)
+    os.replace(tmp, path)
 
 
 def write_artifact_driver(spark: SparkSession, table, base: str,
-                          name: str, fmt: str | None = None) -> None:
+                          name: str, fmt: str | None = None,
+                          partition_by: str | None = None) -> None:
     """Write a DRIVER-RESIDENT artifact (the vocab-gated terms table,
-    lineage, stats — rows that already live on the driver) as one
-    parquet file via pyarrow, skipping the createDataFrame + Spark
-    write job. Each such job costs ~0.3-0.5s of fixed JVM round-trip
-    paid identically at every parallelism level — pure serial time in
-    the N->4N scaling ratio (BASELINE.md gate), so three of them are
-    ~1.5s off the 4N leg. Iceberg keeps the Spark writeTo path (the
-    catalog commit protocol is the point there)."""
+    lineage, stats, a below-gate tombstone set — rows that already live
+    on the driver) as parquet via pyarrow, skipping the createDataFrame
+    + Spark write job. Each such job costs ~0.3-0.5s of fixed JVM
+    round-trip paid identically at every parallelism level — pure
+    serial time in the N->4N scaling ratio (BASELINE.md gate), so three
+    of them are ~1.5s off the 4N leg. Iceberg keeps the Spark writeTo
+    path (the catalog commit protocol is the point there).
+
+    partition_by: one `col=value/part-00000.parquet` file per value,
+    the column dropped from the file — the layout Spark's
+    partitionBy writes and reads back. File names are fixed, so the
+    same table always writes the same bytes."""
     fmt = artifact_format(fmt)
     if fmt == "iceberg":
-        write_artifact(spark.createDataFrame(table), base, name, fmt=fmt)
+        write_artifact(spark.createDataFrame(table), base, name,
+                       partition_by=partition_by, fmt=fmt)
         return
-    import shutil
-
+    import numpy as np
     import pyarrow.parquet as pq
-    # write-to-temp + os.replace (the same swap the reuse_tok terms
-    # path uses): a crash mid-write must never leave the artifact
-    # absent — rmtree-then-write would.
-    path = os.path.join(base, name)
-    tmp = path + ".__tmp__"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp, exist_ok=True)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-    with open(os.path.join(tmp, "_SUCCESS"), "w"):
-        pass
-    shutil.rmtree(path, ignore_errors=True)
-    os.replace(tmp, path)
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        if partition_by is None:
+            pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+        else:
+            keys = table.column(partition_by).to_numpy()
+            order = np.argsort(keys, kind="stable")
+            rows = table.drop_columns([partition_by]).take(order)
+            vals, starts = np.unique(keys[order], return_index=True)
+            ends = np.append(starts[1:], len(keys))
+            for v, a, b in zip(vals, starts, ends):
+                d = os.path.join(tmp, f"{partition_by}={v}")
+                os.makedirs(d)
+                pq.write_table(rows.slice(a, b - a),
+                               os.path.join(d, "part-00000.parquet"))
+        with open(os.path.join(tmp, "_SUCCESS"), "w"):
+            pass
+    _swap_in(os.path.join(base, name), write)
 
 
 def read_artifact(spark: SparkSession, base: str, name: str,

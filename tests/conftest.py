@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
+import types
+import uuid
 
 import pytest
 
@@ -15,6 +18,42 @@ def spark():
     sp.sparkContext.setLogLevel("ERROR")
     yield sp
     sp.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """Context manager counting the Spark work run inside its block:
+    `with spark_jobs() as n: ...` then n.jobs / n.stages / n.tasks.
+    The block runs in a job group of its own, read back through
+    statusTracker(); stages skipped because their shuffle was reused
+    do not count (the rule perfbench/spans.count_group uses)."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def count():
+        group = f"test-{uuid.uuid4().hex}"
+        n = types.SimpleNamespace(jobs=0, stages=0, tasks=0)
+        sc.setJobGroup(group, group)
+        try:
+            yield n
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed by the listener bus, asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        stage_ids = set()
+        for jid in st.getJobIdsForGroup(group):
+            n.jobs += 1
+            job = st.getJobInfo(jid)
+            stage_ids.update(job.stageIds if job else [])
+        for sid in stage_ids:
+            stage = st.getStageInfo(sid)
+            ran = (stage.numCompletedTasks + stage.numFailedTasks
+                   if stage is not None else 0)
+            if ran:
+                n.stages += 1
+                n.tasks += ran
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -240,3 +240,90 @@ def test_delete_docs_guards(spark, tmp_path, del_pair):
     # OOV / empty queries stay empty on a tombstoned index
     assert search(tomb, "zzznotthere", k=5).count() == 0
     assert search(tomb, "", k=5).count() == 0
+
+
+def test_job_counts_pinned(spark, spark_jobs, del_pair, tmp_path):
+    """An id-list delete below the gate is one Spark job, the
+    re-broadcast after it none, and all-OOV results none."""
+    clean, _ = del_pair
+    out = str(tmp_path / "idx")
+    shutil.copytree(clean.path, out)
+    with spark_jobs() as n:
+        assert delete_docs(spark, out, doc_ids=[3, 1, 2])["n_deleted"] == 3
+    assert n.jobs == 1, n
+    idx = Index(spark, out)
+    idx.lookup_query("red")         # warm the driver terms dict
+    with spark_jobs() as n:
+        bc = idx.deletions_broadcast()
+    assert n.jobs == 0, n
+    assert sorted(int(d) for a in bc.value.values() for d in a) == [1, 2, 3]
+    with spark_jobs() as n:
+        assert search(idx, "zzznotthere", k=5).collect() == []
+        assert batch_search(idx, ["zzznotthere", "qqq"], k=5).collect() == []
+    assert n.jobs == 0, n
+
+
+def _delete_sequence(spark, path):
+    """Cumulative deletes over every delete_docs input shape: id lists
+    (overlapping, with an unknown id, after a DataFrame call and after
+    a predicate call), DataFrame ids and a predicate."""
+    ids_df = spark.createDataFrame([(6,), (7,), (2,)], "doc_id long")
+    steps = [dict(doc_ids=[1, 2, 3, 5]),
+             dict(doc_ids=[3, 4, 99999]),
+             dict(doc_ids=ids_df),
+             dict(doc_ids=[7, 8, 8]),
+             dict(predicate="doc_id % 11 = 0"),
+             dict(doc_ids=[9, 11, 60])]
+    return [delete_docs(spark, path, **kw)["n_deleted"] for kw in steps]
+
+
+def test_driver_and_spark_delete_paths_agree(spark, del_pair, tmp_path,
+                                             monkeypatch):
+    """The driver merge (below DEL_BROADCAST_MAX) and the Spark
+    fallback (gate forced to 0) write the same tombstone set, which
+    verify_index accepts and every query mode reads identically."""
+    from irkit_spark.operators.validate import verify_index
+    clean, _ = del_pair
+    drv, spk = str(tmp_path / "driver"), str(tmp_path / "spark")
+    shutil.copytree(clean.path, drv)
+    shutil.copytree(clean.path, spk)
+    n_drv = _delete_sequence(spark, drv)
+    with monkeypatch.context() as m:
+        m.setattr(config, "DEL_BROADCAST_MAX", 0)
+        n_spk = _delete_sequence(spark, spk)
+    want = sorted({1, 2, 3, 4, 5, 6, 7, 8, 9, 11, 60}
+                  | {d for d, _ in DOCS if d % 11 == 0})
+    assert n_drv == n_spk and n_drv[-1] == len(want)
+    sets = [sorted((r["partition_id"], r["doc_id"]) for r in
+                   read_deletions(spark, p).collect())
+            for p in (drv, spk)]
+    assert sets[0] == sets[1] and [d for _, d in sets[0]] == want
+    for p in (drv, spk):
+        r = verify_index(spark, p)
+        assert r["ok"] and r["checks"]["deletions_consistent"]["ok"], r
+    # each run took its own write path: the driver writes fixed file
+    # names, Spark unique ones; re-deleting a tombstoned id on the
+    # driver path rewrites the same bytes
+    import glob
+
+    def snapshot(p):
+        return {f[len(p):]: open(f, "rb").read() for f in
+                glob.glob(f"{p}/deletions/*/*.parquet")}
+    before = snapshot(drv)
+    assert {f.rsplit("/", 1)[1] for f in before} == {"part-00000.parquet"}
+    assert "part-00000.parquet" not in {f.rsplit("/", 1)[1]
+                                        for f in snapshot(spk)}
+    assert delete_docs(spark, drv, doc_ids=[1])["n_deleted"] == len(want)
+    assert snapshot(drv) == before
+    a, b = Index(spark, drv), Index(spark, spk)
+    for q in QUERIES:
+        for mode in ("daat", "wand"):
+            ra = rows(search(a, q, k=15, mode=mode, local=False))
+            assert ra == rows(search(b, q, k=15, mode=mode,
+                                     local=False)), (q, mode)
+            assert not ({d for d, _ in ra} & set(want))
+        ta = [d for d, _ in rows(search(a, q, k=15, mode="taat"))]
+        assert ta == [d for d, _ in rows(search(b, q, k=15,
+                                                  mode="taat"))]
+        assert ta == [d for d, _ in rows(search(a, q, k=15, mode="wand",
+                                                  local=False))]
